@@ -587,7 +587,7 @@ QUERIES["events_sessions"] = events_sessions
 
 ORACLE["events_sessions"] = f"""
     WITH o AS (
-        SELECT user_id, ts,
+        SELECT user_id, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
                          OR ts - lag(ts) OVER w
                             >= INTERVAL {SESSION_GAP_MINUTES} MINUTE
@@ -598,7 +598,7 @@ ORACLE["events_sessions"] = f"""
     i AS (
         SELECT user_id, ts,
                sum(new_s) OVER (
-                   PARTITION BY user_id ORDER BY ts
+                   PARTITION BY user_id ORDER BY ts, event_id
                    ROWS UNBOUNDED PRECEDING
                ) AS sid
         FROM o

@@ -47,7 +47,8 @@ _rng = random.Random(42)
 MH_A = [(_rng.randrange(1, 1 << 20) | 1) for _ in range(N_HASHES)]
 MH_B = [_rng.randrange(0, MH_P) for _ in range(N_HASHES)]
 
-JACCARD_THRESHOLD = 0.3
+JACCARD_THRESHOLD_PCT = 30  # integer percent, for exact comparisons
+JACCARD_THRESHOLD = JACCARD_THRESHOLD_PCT / 100
 # last persisted signature DataFrame (see dedup_minhash_pairs docstring)
 _MINHASH_CACHE: dict = {}
 TOPK_NEIGHBORS = 5
@@ -4200,13 +4201,14 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-double boundary risk)."""
     # r11 ADVICE: the store's float pre-filter (jac >= JACCARD_THRESHOLD)
     # only admits a superset of every curve threshold's integer predicate
-    # BECAUSE min(DEDUP_CURVE_THRESHOLDS)/100 >= JACCARD_THRESHOLD —
+    # BECAUSE min(DEDUP_CURVE_THRESHOLDS) >= JACCARD_THRESHOLD_PCT —
     # lowering a curve threshold below the store's cutoff would silently
-    # undercount.  Enforced here so a future threshold edit fails loudly.
-    assert min(DEDUP_CURVE_THRESHOLDS) >= JACCARD_THRESHOLD * 100, (
+    # undercount.  Enforced here (in integer percents, so no float
+    # rounding decides it) so a future threshold edit fails loudly.
+    assert min(DEDUP_CURVE_THRESHOLDS) >= JACCARD_THRESHOLD_PCT, (
         "dedup_threshold_curve serves from _jaccard_pairs_memo, which "
         f"pre-filters at jaccard >= {JACCARD_THRESHOLD}; curve thresholds "
-        f"below {JACCARD_THRESHOLD * 100}% need the full self-join"
+        f"below {JACCARD_THRESHOLD_PCT}% need the full self-join"
     )
     jacc = _jaccard_pairs_memo(spark, sf_dir).select("i", "n1", "n2")
     # integer predicate: J >= t/100  <=>  100*i >= t*(n1+n2-i)

@@ -1,16 +1,19 @@
 """Streaming CDC compaction: the latest-state upsert view maintained
 incrementally — the streaming twin of ``queries/behavior.py::
-events_latest_state`` (batch oracle), in the same production shape as
-``gamestats.SpamFilteredTeamScoresSink``: fully distributed foreachBatch,
+events_latest_state`` (batch oracle): fully distributed foreachBatch,
 zero driver state, idempotent under batch replay.
 
 At 100 TB-scale ingest this is the standard log->table maintenance loop:
 each micro-batch contributes its per-key latest rows to a compaction log
 (partitioned by batch_id so a replayed batch replaces itself), and the
-log re-compacts to the serving view.  The log stays O(keys x batches
-since last major compaction), not O(events); with Delta/Iceberg the
-overwrite tail becomes a MERGE keyed on user_id and only changed keys
-rewrite.
+whole log re-compacts to the serving view every batch.  The log stays
+O(keys x batches since last major compaction), not O(events); with
+Delta/Iceberg the overwrite tail becomes a MERGE keyed on user_id and
+only changed keys rewrite.  The additive sinks
+(``gamestats.SpamFilteredTeamScoresSink``,
+``viewmaint.SegmentRevenueViewSink``) keep no log: they fold each batch
+into one versioned state (``logio.fold_version``), which is bounded to
+one partition — the per-user state here grows with the key space.
 """
 
 from __future__ import annotations

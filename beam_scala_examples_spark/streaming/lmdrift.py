@@ -8,7 +8,7 @@ incoming text still looks like the reference corpus — mean surprisal
 under a FIXED unigram LM drifting up means rarer/noisier tokens (or a
 new domain); the out-of-vocabulary rate drifting up means the model no
 longer covers the stream.  Both statistics are ADDITIVE in exact
-integer micro-nats / counts, so the ``SegmentRevenueViewSink`` pattern
+integer micro-nats / counts, so the additive contribution-log pattern
 applies verbatim: each micro-batch writes one O(sources) contribution
 row set under its batch_id (idempotent dynamic partition overwrite),
 the serving view is one re-aggregation of the log, and the log itself

@@ -6,8 +6,8 @@ An embedding pipeline wants to know when the dominant direction of the
 incoming vectors moves — new domain, encoder regression, corpus-wide
 drift the ABTT correction (``emb_abtt_correct``) depends on.  The Gram
 matrix, per-dimension sums, and row count are all ADDITIVE in exact
-int64 over once-quantized components, so the ``SegmentRevenueViewSink``
-/ ``LmDriftViewSink`` additive-view pattern applies: each micro-batch
+int64 over once-quantized components, so the ``LmDriftViewSink``
+additive-view pattern applies: each micro-batch
 writes its own O(DIM²) integer moment rows under its batch_id
 (idempotent dynamic partition overwrite), and the serving view
 re-aggregates the log into the covariance with the IDENTICAL IEEE

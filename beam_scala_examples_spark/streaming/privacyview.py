@@ -4,8 +4,8 @@ dimension stream.
 
 A governance gate wants to know AT INGEST when a quasi-identifier group
 slips below k — not after the next full-table audit.  Group sizes are
-additive counts, so the ``SegmentRevenueViewSink`` additive-view
-pattern applies verbatim: each micro-batch writes its own O(groups
+additive counts, so the additive-view contribution-log pattern
+applies verbatim: each micro-batch writes its own O(groups
 touched) count rows under its batch_id (idempotent dynamic partition
 overwrite), and the serving view re-aggregates the log into exactly the
 batch audit — same group sizes, same below-k flags, same at-risk share

@@ -283,7 +283,11 @@ def _drift(
     relax the gate (it cannot move the probe), which was the r10 reason
     for introducing the probe in the first place."""
     cpu_ref = bands.get("cpu_micro_ref")
-    if cpu_ref and cpu_now:
+    if cpu_ref:
+        # no current probe: nothing host-only corroborates a drift, and
+        # the anchor ratio is one a code change can move
+        if not cpu_now:
+            return 1.0
         drift = cpu_now / float(cpu_ref)
     else:
         ref_anchor = bands.get("anchor_r01_shared_total")

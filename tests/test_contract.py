@@ -182,6 +182,11 @@ def test_drift_requires_cpu_corroboration():
     # probe reads 2.2x -> cpu-alone relaxation, no false flags
     assert bench.band_violations(slowed, bands, {}, 11.0, 0.044) == {}
     assert round(bench._drift(bands, 11.0, 0.044), 9) == 2.2
+    # (e) the bands record a probe reference but this run has no probe
+    # (missing or zero): no relaxation, not the anchor-ratio fallback
+    assert bench._drift(bands, 22.0, None) == 1.0
+    assert bench._drift(bands, 22.0, 0.0) == 1.0
+    assert set(bench.band_violations(slowed, bands, {}, 22.0, None)) == {"a", "b"}
     # legacy bands without the probe keep the round-10 anchor fallback
     legacy = {k: v for k, v in bands.items() if k != "cpu_micro_ref"}
     assert bench.band_violations(slowed, legacy, {}, 22.0, 0.02) == {}
@@ -194,6 +199,20 @@ def test_drift_requires_cpu_corroboration():
         11.0, bands, {}, strict=True, warmth_skipped={"a": ["w", "c"]}
     ) == 5
     assert bench.exit_code(11.0, bands, {}, strict=True) == 0
+
+
+def test_jaccard_curve_guard_compares_integer_percents():
+    """The dedup curve's store-cutoff guard compares integer percents:
+    the cutoff has an integer-percent twin that the float threshold is
+    derived from, and every curve threshold is an integer percent at or
+    above it."""
+    from beam_scala_examples_spark.queries import llmdata
+
+    pct = llmdata.JACCARD_THRESHOLD_PCT
+    assert isinstance(pct, int)
+    assert llmdata.JACCARD_THRESHOLD == pct / 100
+    assert all(isinstance(t, int) for t in llmdata.DEDUP_CURVE_THRESHOLDS)
+    assert min(llmdata.DEDUP_CURVE_THRESHOLDS) >= pct
 
 
 def test_loadavg_gate_sees_ghost_load():

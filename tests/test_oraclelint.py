@@ -293,3 +293,31 @@ def test_flake_ledger_demands_fixes():
         "materialize the offending CTE (tools/oracle_stability.py --emit) "
         "instead of re-adjudicating, then retire the ledger entries"
     )
+
+
+def test_events_sessions_oracle_is_tie_stable():
+    """Each user's second session opens with two events at the same ts.
+    The oracle's ``lag`` and its running session count must both order
+    by (ts, event_id); ordered by ts alone, DuckDB's parallel sort may
+    count the tied row before the session break and split off a
+    one-event session, differently from one evaluation to the next
+    (it takes this many users for the sort to run in parallel)."""
+    users = 100_000
+    con = duckdb.connect()
+    con.sql(f"""
+        CREATE TABLE events AS
+        SELECT 3 * u + k AS event_id,
+               TIMESTAMP '2024-01-02 00:00:00'
+                   + INTERVAL (CASE WHEN k = 1 THEN 0 ELSE 40 END) MINUTE
+                   AS ts,
+               u AS user_id, 'click' AS event_type, 1.0 AS value
+        FROM range({users}) r(u), range(1, 4) s(k)
+    """)
+    t0 = 1_704_153_600_000_000  # 2024-01-02 00:00:00 in epoch us
+    want = sorted(
+        [(u, t0, 1, 0) for u in range(users)]
+        + [(u, t0 + 40 * 60_000_000, 2, 0) for u in range(users)]
+    )
+    for _ in range(3):
+        assert sorted(con.sql(ORACLE["events_sessions"]).fetchall()) == want
+    con.close()

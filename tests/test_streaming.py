@@ -9,6 +9,7 @@ matching batch query.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -222,6 +223,131 @@ def test_spam_filter_sink_batch_replay_idempotent(spark, sf_dir, event_rows, tmp
         tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
     )
     assert once == twice
+
+
+def _event_batch(spark, rows):
+    return spark.createDataFrame(
+        [(r["event_id"], r["ts"], r["user_id"], r["event_type"], r["value"])
+         for r in rows],
+        "event_id long, ts string, user_id long, event_type string, value double",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def _spam_twin(spark, rows):
+    twin = gamestats.SpamFilteredTeamScores()
+    twin(_event_batch(spark, rows), 0)
+    return twin.result()
+
+
+def _versions(path):
+    return sorted(int(d[2:]) for d in os.listdir(path) if d.startswith("v="))
+
+
+def test_spam_sink_replay_refolds_from_version_below(spark, event_rows, tmpdir):
+    """Exactly-once on the versioned state: replaying batch b after its
+    version v=<b> is written folds onto the version below b again, so
+    the output table is unchanged and still equals the driver-dict
+    twin."""
+    sink = gamestats.SpamFilteredTeamScoresSink(
+        f"{tmpdir}/contrib", f"{tmpdir}/spam_filtered"
+    )
+    parts = [event_rows[i:i + 250] for i in range(0, 750, 250)]
+    for b, rows in enumerate(parts):
+        sink(_event_batch(spark, rows), b)
+    out = f"{tmpdir}/spam_filtered"
+    once = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    sink(_event_batch(spark, parts[-1]), len(parts) - 1)  # replay
+    twice = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert once == twice == _spam_twin(spark, event_rows[:750])
+
+
+def test_spam_sink_ignores_incomplete_version(spark, event_rows, tmpdir):
+    """A version directory without its completion marker (what a write
+    that died part-way leaves) is never folded onto, even as the newest
+    version below the batch, and is pruned once it is older than the
+    version a batch folds onto."""
+    contrib = f"{tmpdir}/contrib"
+    sink = gamestats.SpamFilteredTeamScoresSink(
+        contrib, f"{tmpdir}/spam_filtered"
+    )
+    a, b, c = event_rows[:300], event_rows[300:600], event_rows[600:900]
+    sink(_event_batch(spark, a), 0)
+    # a crashed v=1: batch a's state twice over, no _SUCCESS
+    os.makedirs(f"{contrib}/v=1")
+    for k, part in enumerate(
+        f for f in os.listdir(f"{contrib}/v=0") for _ in range(2)
+        if f.endswith(".parquet")
+    ):
+        shutil.copy(f"{contrib}/v=0/{part}", f"{contrib}/v=1/{k}-{part}")
+    sink(_event_batch(spark, b), 2)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
+    )
+    assert got == _spam_twin(spark, a + b)
+    sink(_event_batch(spark, c), 3)
+    assert _versions(contrib) == [2, 3]
+
+
+def test_spam_sink_keeps_two_versions_and_two_jobs(spark, event_rows, tmpdir):
+    """After 20 batches at most two state versions are on disk, and the
+    last batch runs at most 3 Spark jobs (one per write: the version
+    and the output table), each a single stage — no exchange, no schema
+    inference job, and a scan that does not grow with the batch count
+    (the batch_id-partitioned log ran 12 jobs here)."""
+    contrib = f"{tmpdir}/contrib"
+    sink = gamestats.SpamFilteredTeamScoresSink(
+        contrib, f"{tmpdir}/spam_filtered"
+    )
+    sc = spark.sparkContext
+    per = len(event_rows) // 20
+    batches = [
+        _event_batch(spark, event_rows[b * per:(b + 1) * per])
+        for b in range(20)
+    ]
+    for b, batch in enumerate(batches[:-1]):
+        sink(batch, b)
+        assert len(_versions(contrib)) <= 2
+    sc.setJobGroup("spam-sink-last-batch", "last spam sink batch")
+    try:
+        sink(batches[-1], 19)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(_versions(contrib)) <= 2
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("spam-sink-last-batch")
+    assert 1 <= len(jobs) <= 3
+    assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
+    )
+    assert got == _spam_twin(spark, event_rows[:20 * per])
+
+
+def test_spam_sink_survives_query_restart(spark, event_rows, tmpdir):
+    """Stopping the streaming query and restarting it on the same
+    checkpoint and sink directories (a fresh sink object) continues the
+    versioned state: the final table equals the driver-dict twin over
+    every event."""
+    stage, feed = f"{tmpdir}/stage", f"{tmpdir}/feed"
+    n = write_arrival_chunks(event_rows, 250, stage)
+    os.makedirs(feed)
+
+    def run(first, last):
+        for k in range(first, last):
+            name = f"chunk_{k:05d}.json"
+            os.rename(f"{stage}/{name}", f"{feed}/{name}")
+        sink = gamestats.SpamFilteredTeamScoresSink(
+            f"{tmpdir}/contrib", f"{tmpdir}/spam_filtered"
+        )
+        _run_stream(read_event_stream(spark, feed), "append", sink, tmpdir)
+
+    run(0, n // 2)
+    run(n // 2, n)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
+    )
+    assert got == _spam_twin(spark, event_rows)
+    assert _versions(f"{tmpdir}/contrib") == [n - 2, n - 1]
 
 
 def test_pane_timing_early_and_ontime(spark, tmpdir):
